@@ -25,26 +25,28 @@ private[graft] object GateSupport {
     * shuffle/state partition count, and a PARAMETERIZED state-store
     * provider.
     *
-    * Provider choice, measured (r20; full A/B in OPTIMIZATION_r20.md):
-    * the r19 verdict asked for RocksDB here (guide §5 — the default
-    * provider keeps every key's state on-heap per partition, so at
-    * 100 TB a stream-stream join window makes executor heap the scale
-    * ceiling; RocksDB keeps state off-heap with changelog checkpoints).
-    * Measured at every reachable scale, RocksDB LOST: +10–50% per gate
-    * at sf0.1, s12 22.7 s vs 8.7 s at sf1 (17.5 s after
-    * trackTotalNumberOfRows=false), ~2–3× sf10 walls — per-micro-batch
-    * native store load/commit dominates bounded feeds, while the default
-    * provider's peak state is 41–89 MB on-heap at sf1 (StateProbe),
-    * nowhere near a heap ceiling at any SF the decade instrument
-    * reaches. So the DEFAULT stays Spark's in-memory provider, and
+    * Provider choice, measured. The default provider keeps every key's
+    * state on-heap per partition; RocksDB keeps it off-heap with
+    * changelog checkpoints, so only RocksDB survives per-partition state
+    * beyond heap (a 1 h join window over 10^12 events is 100s of GB per
+    * 1000 partitions). r20 measured RocksDB 1.5–3× slower (32 cores,
+    * sf0.1–sf10; OPTIMIZATION_r20.md), but those runs also paid Hadoop's
+    * per-file chmod/readlink child processes on every checkpoint write,
+    * through the same CheckpointFileManager RocksDB uploads with. With
+    * fork-free checkpoint I/O ([[graft.streaming.LocalCheckpointFileManager]])
+    * at sf0.1 on 4 vCPUs (isolated, min-of-3, two windows), s6 reads
+    * 2.38/2.02 s in-memory vs 2.70/2.66 s RocksDB and s12 2.24/2.11 vs
+    * 2.73/2.56 s: RocksDB still loses, by 1.1–1.3× instead of 1.5–3×
+    * (PLANS.md). So the DEFAULT stays Spark's in-memory provider, and
     * `SPARK_GRAFT_STREAM_STATE=rocksdb` flips every stateful gate to
     * RocksDB (with changelog checkpointing and row-tracking off) for
-    * deployments where per-partition state actually exceeds heap —
-    * state at a 1 h join window over 10^12 events is 100s of GB per
-    * 1000 partitions, which only RocksDB survives. Output is
-    * provider-independent (oracle 242/242 under both). */
+    * deployments where per-partition state actually exceeds heap. Output
+    * is provider-independent (oracle 242/242 under both). */
   def streamSession(s: SparkSession, partitions: Int = 8): SparkSession = {
     val ss = s.newSession()
+    // newSession() starts from the SparkContext conf, so settings the
+    // caller applied at runtime (SparkEntry.entry) must be carried over
+    Tables.sessionConf.keys.foreach(k => s.conf.getOption(k).foreach(ss.conf.set(k, _)))
     ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     if (sys.env.get("SPARK_GRAFT_STREAM_STATE").contains("rocksdb")) {
       ss.conf.set("spark.sql.streaming.stateStore.providerClass",

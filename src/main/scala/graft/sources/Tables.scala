@@ -58,7 +58,14 @@ object Tables {
     // one stage to interpreted execution instead of failing the query —
     // the pre-r19 behavior, a perf-only regression, never a correctness
     // one.
-    "spark.sql.codegen.fallback" -> "true")
+    "spark.sql.codegen.fallback" -> "true",
+    // Streaming checkpoint files on `file:` roots are written through
+    // java.nio instead of Hadoop's local file system, which forks a
+    // chmod/readlink child process per offset-log, commit-log and
+    // state-store file (perfbench eventlog_tail on 4 vCPUs: state commit
+    // p50 353 → 13 ms). Other schemes keep Spark's default manager.
+    graft.streaming.LocalCheckpointFileManager.ConfKey ->
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
 
   /** Expected shape per table: column → accepted Spark types. A silent
     * upstream regeneration of the testdata burned 19 gates in round 9;

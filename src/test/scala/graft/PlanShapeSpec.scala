@@ -119,6 +119,19 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("mlmMask hashes each token once (mask binding survives optimization)") {
+    // r20 bound mlmMask's per-token md5 mask (`__z`) in its own projection
+    // so its four consumers read it instead of re-hashing (~4 md5 passes
+    // per document before). A multi-consumer binding is never collapsed
+    // back by CollapseProject. If a Spark upgrade starts inlining it, or a
+    // filter on a column derived from it is pushed below the binding (the
+    // empty-document filter did this until it moved onto the token list),
+    // the optimized plan shows more than one md5 and this guard fails.
+    val opt = Corpus.mlmMask(docs, "doc_id", "text").queryExecution.optimizedPlan.toString
+    assert("md5\\(".r.findAllIn(opt).length === 1,
+      s"mlmMask's md5 mask was inlined into its consumers:\n${opt.take(1500)}")
+  }
+
   test("weightedSample plans as TakeOrderedAndProject, never a global sort") {
     val ws = Corpus.weightedSample(
       docs.select(col("doc_id"), col("n_chars")), "doc_id", col("n_chars"), k = 10)

@@ -29,6 +29,21 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.where(col("partition_nr") =!= floor(col("event_id") / 256L)).count() === 0)
   }
 
+  test("stream child sessions checkpoint through the graft manager") {
+    import graft.gates.GateSupport.streamSession
+    import graft.streaming.LocalCheckpointFileManager.ConfKey
+    val graftManager = classOf[graft.streaming.LocalCheckpointFileManager].getName
+    // builder-made session: the setting comes from the SparkContext conf
+    assert(streamSession(spark).conf.get(ConfKey) === graftManager)
+    // SparkEntry.entry sets it at runtime on the caller's session, which
+    // newSession() alone would not see: a runtime value must carry over
+    val caller = spark.newSession()
+    caller.conf.set(ConfKey, "runtime.only.Manager")
+    assert(streamSession(caller).conf.get(ConfKey) === "runtime.only.Manager")
+    SparkEntry.entry(caller)
+    assert(streamSession(caller).conf.get(ConfKey) === graftManager)
+  }
+
   test("streaming exact dedup: dropDuplicates removes cross-batch repeats") {
     val docs = table("documents")
     // feed the same file twice via two subdirs -> every doc arrives twice
